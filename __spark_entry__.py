@@ -22,11 +22,6 @@ def _tune(spark: SparkSession) -> None:
     the Pandas-UDF modules regardless of the driver's cwd."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
-    try:
-        # static conf on some builds - harmless to skip if sealed
-        spark.conf.set("spark.sql.codegen.cache.maxEntries", "2000")
-    except Exception:
-        pass
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
     from data_pipeline_capstone_project_spark.session import ship_package
 

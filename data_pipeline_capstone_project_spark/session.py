@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import os
 import re
+import tempfile
 import zipfile
 
 import threading
@@ -38,10 +39,13 @@ def ship_package(spark: SparkSession) -> None:
     re-import the module. On a real cluster that is exactly what you
     want (ship one zip instead of pickling code per task), and it is
     done the standard way: zip the package and ``addPyFile`` it.
-    Idempotent; rebuilds only when sources are newer than the zip.
+    Idempotent; rebuilds only when sources are newer than the zip,
+    which lives in the temp directory (``$TMPDIR``, else ``/tmp``).
     """
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zip_path = os.path.join("/tmp", "data_pipeline_capstone_project_spark.zip")
+    zip_path = os.path.join(
+        tempfile.gettempdir(), "data_pipeline_capstone_project_spark.zip"
+    )
     # Serialized (r15): concurrent sessions/queries (e.g. bench.py's
     # threaded warm pass) used to race the rebuild - two threads both
     # wrote zip_path+".tmp" and the second os.replace lost. The lock
